@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from dariadb_spark.functions.statistics import apply_functions
-from dariadb_spark.model import MEAS_FIELDS, measurements
+from dariadb_spark.model import (
+    MEAS_DDL,
+    MEAS_FIELDS,
+    local_frame,
+    measurements,
+)
 from dariadb_spark.operators.asof import current_value as _current_value
 from dariadb_spark.operators.asof import read_time_point as _read_time_point
 from dariadb_spark.operators.downsample import downsample as _downsample
@@ -130,10 +135,11 @@ class TsEngine:
         if self.store is None:
             raise ValueError("append requires a writable store (TsEngine.open)")
         if not isinstance(rows, DataFrame):
-            rows = self.spark.createDataFrame(
-                [Row(id=int(i), time=int(t), value=float(v), flag=int(fl))
+            rows = local_frame(
+                self.spark,
+                [(int(i), int(t), float(v), int(fl))
                  for (i, t, v, fl) in rows],
-                "id bigint, time bigint, value double, flag bigint",
+                MEAS_DDL,
             )
         return self.store.append(rows.select(*MEAS_FIELDS), isolated=isolated)
 

@@ -19,6 +19,8 @@ mapping so the correctness harness compares like with like.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,6 +31,15 @@ from dariadb_spark.session import ensure_runtime_confs
 FLAGS_NO_DATA: int = 0xFFFFFFFF  # 4294967295
 
 MEAS_FIELDS = ("id", "time", "value", "flag")
+
+#: the Meas row type as a Spark DDL schema
+MEAS_DDL = "id bigint, time bigint, value double, flag bigint"
+
+#: the stores' fixed on-disk schema: Meas plus the hive day directory
+#: ``p_date`` (typed ``date``, as partition inference would type it).
+#: Stores read with it instead of inferring it from a parquet footer,
+#: which would cost one Spark job per read.
+STORE_DDL = MEAS_DDL + ", p_date date"
 
 #: raw parquet event-time column (ns) carried for scan-pruning pushdown
 RAW_TS = "_raw_ts"
@@ -114,6 +125,44 @@ def measurements(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:  # "timestamp" (LTZ)
         cols[1] = F.unix_millis(F.col("ts")).alias("time")
     return events.select(*cols)
+
+
+def canonical_meas(df: DataFrame) -> DataFrame:
+    """``df``'s Meas columns cast to the Meas types (:data:`MEAS_DDL`) —
+    what the stores write, so their fixed read schema holds. Columns that
+    already have their type get no Cast: over a local relation Spark
+    evaluates a projection on the driver before it simplifies casts."""
+    have = dict(df.dtypes)
+    return df.select(*(
+        F.col(c) if have.get(c) == t else F.col(c).cast(t).alias(c)
+        for c, t in (f.split() for f in MEAS_DDL.split(", "))
+    ))
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], ddl: str
+) -> DataFrame:
+    """A small driver-side table (e.g. a requested-id list) as an
+    Arrow-backed local relation. Spark plans it as a LocalTableScan;
+    ``createDataFrame`` over a Python list is a parallelized RDD instead,
+    and reading that one costs a Spark job. Built from a pyarrow table,
+    not pandas: the pandas route stores a NaN value as NULL."""
+    import pyarrow as pa
+
+    rows = list(rows)
+    names = [f.split()[0] for f in ddl.split(",")]
+    table = pa.table({n: [r[k] for r in rows] for k, n in enumerate(names)})
+    return spark.createDataFrame(table, ddl)
+
+
+def order_by_id(df: DataFrame, ids: list[int] | None) -> DataFrame:
+    """Presentation order by ``id``. With explicit ``ids`` the result has
+    at most ``len(ids)`` rows, so it is sorted in one partition: a global
+    ``orderBy`` would add a range-sampling job and a range exchange. An
+    unbounded result (``ids`` None or empty) keeps ``orderBy``."""
+    if ids:
+        return df.coalesce(1).sortWithinPartitions("id")
+    return df.orderBy("id")
 
 
 def flag_predicate(flag: int) -> Column:

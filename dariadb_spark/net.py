@@ -32,8 +32,8 @@ shipped PACKED Meas arrays, not text — measurement-shaped results
 base64-wrapped column-major int64/float64 buffers inside the same JSON
 envelope. Measured (bench_stress `stress_net_protocol`): it removes
 the JSON row tax from the wire path while keeping one framing for
-every verb; appends additionally enter Spark through an Arrow-backed
-pandas DataFrame instead of a Row list.
+every verb; appends additionally enter Spark as an Arrow table (a
+local relation, NaN values kept) instead of a Row list.
 """
 
 from __future__ import annotations
@@ -46,6 +46,7 @@ import threading
 from typing import Any
 
 from dariadb_spark.engine import TsEngine
+from dariadb_spark.model import MEAS_DDL
 
 _MEAS_COLS = ["id", "time", "value", "flag"]
 
@@ -173,20 +174,11 @@ class _Handler(socketserver.StreamRequestHandler):
             return {"qid": qid, "status": "ok", **payload}
         if op == "append":
             if "rows_bin" in p:
-                import pandas as pd
+                import pyarrow as pa
 
-                ids, times, values, flags = _unpack_meas(
-                    p["rows_bin"], int(p["n"])
-                )
+                cols = _unpack_meas(p["rows_bin"], int(p["n"]))
                 sdf = eng.spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            "id": ids,
-                            "time": times,
-                            "value": values,
-                            "flag": flags,
-                        }
-                    )
+                    pa.table(dict(zip(_MEAS_COLS, cols))), MEAS_DDL
                 )
                 n = eng.append(sdf, isolated=bool(p.get("isolated", False)))
             else:

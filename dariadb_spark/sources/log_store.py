@@ -69,10 +69,15 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import MEAS_FIELDS
+from dariadb_spark.model import (
+    MEAS_DDL,
+    MEAS_FIELDS,
+    RAW_DAY,
+    STORE_DDL,
+    canonical_meas,
+)
 
 _DAY_MS = 86_400_000
-_EMPTY_SCHEMA = "id bigint, time bigint, value double, flag bigint"
 
 
 class ConcurrentModificationError(RuntimeError):
@@ -288,13 +293,15 @@ class LogTsStore:
         staging dir, then rename the part files into ``files/`` under
         unique names; return the add actions. Rename-into-place is safe
         from any number of concurrent writers (nothing shared, names
-        unique) and the files stay INVISIBLE until the log commit."""
+        unique) and the files stay INVISIBLE until the log commit. Rows
+        are cast to the Meas types first: reads rely on the store's
+        fixed schema (:data:`~dariadb_spark.model.STORE_DDL`)."""
         token = uuid.uuid4().hex
         stage = self.root / f"stage-{token}"
         adds: list[dict] = []
         try:
             (
-                df.select(*MEAS_FIELDS)
+                canonical_meas(df)
                 .withColumn(
                     "p_date",
                     F.date_format(
@@ -371,14 +378,14 @@ class LogTsStore:
                     f"vacuumed data file(s), e.g. {missing[0]}"
                 )
         if not live:
-            return self.spark.createDataFrame([], _EMPTY_SCHEMA)
-        from dariadb_spark.model import RAW_DAY
-
-        # ONE scan over the explicit file list; basePath re-derives the
-        # hive p_date so Catalyst still prunes whole day directories
+            return self.spark.createDataFrame([], MEAS_DDL)
+        # ONE scan over the explicit file list with the store's fixed
+        # schema (no inference job); basePath re-derives the hive p_date
+        # so Catalyst still prunes whole day directories
         # (PartitionFilters) — pinned by the parametrized engine test.
         return (
             self.spark.read.option("basePath", str(self.files_dir))
+            .schema(STORE_DDL)
             .parquet(*sorted(live))
             .select(*MEAS_FIELDS, F.col("p_date").alias(RAW_DAY))
         )
@@ -397,10 +404,10 @@ class LogTsStore:
             if len(paths) <= files_per_partition:
                 continue
             merged = (
-                self.spark.read.parquet(*paths)
+                self.spark.read.schema(MEAS_DDL)
+                .parquet(*paths)
                 .repartition(files_per_partition)
                 .sortWithinPartitions("id", "time")
-                .select(*MEAS_FIELDS)
             )
             adds.extend(self._write_files(merged))
             removes.extend(paths)
@@ -424,9 +431,9 @@ class LogTsStore:
                 boundary.append(path)
         if boundary:
             kept = (
-                self.spark.read.parquet(*boundary)
+                self.spark.read.schema(MEAS_DDL)
+                .parquet(*boundary)
                 .where(F.col("time") >= cutoff_ms)
-                .select(*MEAS_FIELDS)
             )
             adds.extend(self._write_files(kept))
             removes.extend(boundary)

@@ -27,7 +27,13 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dariadb_spark.model import MEAS_FIELDS
+from dariadb_spark.model import (
+    MEAS_DDL,
+    MEAS_FIELDS,
+    RAW_DAY,
+    STORE_DDL,
+    canonical_meas,
+)
 
 _DAY_MS = 86_400_000
 
@@ -70,6 +76,12 @@ class ParquetTsStore:
       isolation — is the Delta/Iceberg swap, whose transaction log
       makes concurrent appends first-class; a homegrown commit log
       here would be rebuilding that badly.
+
+    Fixed schema: every file holds ``id bigint, time bigint, value
+    double, flag bigint`` under a ``p_date=YYYY-MM-DD`` directory
+    (:data:`~dariadb_spark.model.STORE_DDL`). ``append()`` casts to those
+    types before writing, so reads pass the schema instead of inferring
+    it — inference costs a footer-reading Spark job on every read.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -102,7 +114,7 @@ class ParquetTsStore:
 
         obs = Observation()
         writer = (
-            _with_day(meas.select(*MEAS_FIELDS))
+            _with_day(canonical_meas(meas))
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .write.partitionBy("p_date")
         )
@@ -133,12 +145,8 @@ class ParquetTsStore:
         a bound on ``time`` alone prunes row groups but NOT the directory
         listing. Operators project it away before returning."""
         if not any(self.data_dir.iterdir()):
-            return self.spark.createDataFrame(
-                [], "id bigint, time bigint, value double, flag bigint"
-            )
-        from dariadb_spark.model import RAW_DAY
-
-        return self.spark.read.parquet(str(self.data_dir)).select(
+            return self.spark.createDataFrame([], MEAS_DDL)
+        return self._scan(self.data_dir).select(
             *MEAS_FIELDS, F.col("p_date").alias(RAW_DAY)
         )
 
@@ -153,23 +161,25 @@ class ParquetTsStore:
             str(p) for p in self.data_dir.glob("p_date=*/*.parquet")
         )
         if not files:
-            return self.spark.createDataFrame(
-                [], "id bigint, time bigint, value double, flag bigint"
-            )
-        from dariadb_spark.model import RAW_DAY
-
+            return self.spark.createDataFrame([], MEAS_DDL)
         return (
             self.spark.read.option("basePath", str(self.data_dir))
+            .schema(STORE_DDL)
             .parquet(*files)
             .select(*MEAS_FIELDS, F.col("p_date").alias(RAW_DAY))
         )
+
+    def _scan(self, path: Path, ddl: str = STORE_DDL) -> DataFrame:
+        """A parquet scan of ``path`` with the store's fixed schema
+        (:data:`MEAS_DDL` for a directory without day partitions)."""
+        return self.spark.read.schema(ddl).parquet(str(path))
 
     # -- T5: compaction (Dropper / Engine::compress_all) ------------------
     def compact(self, files_per_partition: int = 1) -> None:
         """Rewrite each day partition into few files sorted by (id, time) —
         the WAL→page drop: small append deltas become scan-optimal files
         whose row-group stats prune on id and time."""
-        df = self.spark.read.parquet(str(self.data_dir))
+        df = self._scan(self.data_dir)
         tmp = self.root / "_compact_tmp"
         (
             df.repartition(files_per_partition, "p_date")
@@ -205,15 +215,13 @@ class ParquetTsStore:
             elif day_ms == cutoff_day:
                 boundary = part
         if boundary is not None:
-            kept = (
-                self.spark.read.parquet(str(boundary))
-                .where(F.col("time") >= cutoff_ms)
-                .select(*MEAS_FIELDS)
+            kept = self._scan(boundary, MEAS_DDL).where(
+                F.col("time") >= cutoff_ms
             )
             tmp = self.root / "_erase_tmp"
             kept.write.mode("overwrite").parquet(str(tmp))
             shutil.rmtree(boundary)
-            rewritten = self.spark.read.parquet(str(tmp))
+            rewritten = self._scan(tmp, MEAS_DDL)
             if rewritten.limit(1).count() > 0:
                 _with_day(rewritten).write.partitionBy("p_date").mode(
                     "append"

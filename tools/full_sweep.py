@@ -2,12 +2,18 @@
 (BASELINE.md records one row per round): every registered query vs its
 DuckDB oracle at 10× fixture scale, value-hash compared after the
 driver's canonicalization (tests/parity.py), one warm local[32]
-session. Exit nonzero on any mismatch."""
+session. Exit nonzero on any mismatch.
+
+    python tools/full_sweep.py [NAME_REGEX]
+
+An optional regex (``re.search`` on the query name) limits the sweep to
+one operator family, e.g. ``'^(timepoint_asof|current_value)$'``."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -21,6 +27,10 @@ from tests.parity import compare  # noqa: E402
 
 
 def main() -> None:
+    pattern = re.compile(sys.argv[1] if len(sys.argv) > 1 else "")
+    names = [n for n in REGISTRY if pattern.search(n)]
+    if not names:
+        sys.exit(f"no registered query matches {pattern.pattern!r}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("dariadb-full-sweep")
     spark.sparkContext.setLogLevel("ERROR")
@@ -33,7 +43,8 @@ def main() -> None:
         )
     t0 = time.perf_counter()
     bad, n = [], 0
-    for name, spec in REGISTRY.items():
+    for name in names:
+        spec = REGISTRY[name]
         n += 1
         try:
             res = compare(name, spec.fn(spark, sf_dir), con, spec.oracle)
@@ -42,13 +53,14 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — sweep must report, not die
             bad.append((name, [f"error: {exc}"[:200]]))
         if n % 25 == 0:
-            print(f"  …{n}/{len(REGISTRY)}", file=sys.stderr)
+            print(f"  …{n}/{len(names)}", file=sys.stderr)
     wall = time.perf_counter() - t0
     print(json.dumps({
         "metric": "full_registry_sweep",
         "sf_dir": sf_dir,
-        "n": len(REGISTRY),
-        "hash_match": len(REGISTRY) - len(bad),
+        "filter": pattern.pattern,
+        "n": len(names),
+        "hash_match": len(names) - len(bad),
         "mismatches": bad,
         "wall_sec": round(wall, 1),
     }))
